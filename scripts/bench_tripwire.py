@@ -10,8 +10,10 @@ Usage: bench_tripwire.py <fresh BENCH_LOCAL.json> <prev record.json> [factor]
 Compares PROBE-NORMALIZED per-query times (cal_norm_queries: seconds /
 calibration probe, so two records from drifted environments compare
 directly). Queries slower than `factor` (default 3.0) x their previous
-normalized time are listed and the script exits 1. Sub-100ms-normalized
-entries are skipped (scheduler noise band, not a regression signal).
+normalized time are listed and the script exits 1. A current time inside
+the noise band (<= 0.1 normalized) never trips, and a previous time below
+NOISE_FLOOR / factor counts as that floor, so jitter among fast queries is
+ignored while a fast query that blows up past the band still trips.
 """
 import json
 import sys
@@ -23,9 +25,10 @@ cur = json.load(open(sys.argv[1]))["cal_norm_queries"]
 prev = json.load(open(sys.argv[2]))["cal_norm_queries"]
 
 shared = sorted(set(cur) & set(prev))
-tripped = [(q, prev[q], cur[q], cur[q] / prev[q])
+tripped = [(q, prev[q], cur[q], cur[q] / prev[q] if prev[q] > 0 else float("inf"))
            for q in shared
-           if prev[q] > NOISE_FLOOR and cur[q] > prev[q] * FACTOR]
+           if cur[q] > NOISE_FLOOR
+           and cur[q] > max(prev[q], NOISE_FLOOR / FACTOR) * FACTOR]
 removed = sorted(set(prev) - set(cur))
 
 if removed:

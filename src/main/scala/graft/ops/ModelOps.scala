@@ -141,7 +141,8 @@ object ModelOps {
       .groupBy(col("s.b").as("b"))
       .agg(sum(round(col("err") * col("s.x") * 1e6).cast("long")).as("g6"))
       .collect() // ≤ buckets+1 rows — the bounded driver read of the loop
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      // a bucket touched only by null-label docs sums to null: no gradient
+      .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
     def round6(x: Double): Double = {
       val f = math.abs(x) * 1e6 + 0.5
       math.signum(x) * (f - (f % 1.0)) / 1e6

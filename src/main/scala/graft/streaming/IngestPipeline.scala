@@ -25,9 +25,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   at-least-once insert + version collapse).
   * - No watermark: arbitrarily-late points are accepted by design
   *   (reference T3, `server/BaseMetricFactory.java:70-73`).
-  * - Tree updates append only NEW names per batch (left_anti against
-  *   the current tree), with SIMPLE status; status semantics stay
-  *   read-side (`max_by(status, updated)`).
+  * - Tree maintenance runs one filtered scan of the tree per batch,
+  *   keeping the rows of the batch's metrics and their ancestor dirs,
+  *   and decides ban, newness and revival on the driver from their
+  *   latest statuses (the read side's `currentTree`). The scan still
+  *   reads every tree file (the tree is not laid out by name), so its
+  *   cost grows with the tree. Only NEW names (SIMPLE) and revived ones
+  *   are appended, as one small file.
   */
 final class IngestPipeline(
     parser: LineParser = new LineParser(),
@@ -83,20 +87,14 @@ final class IngestPipeline(
 
   /** Tree rows (name, level, parent, status, updated) for every metric
     * AND its ancestor dirs — the trie-node creation of
-    * `MetricTree.modify` (`search/tree/MetricTree.java:300-328`)
-    * expressed relationally.
+    * `MetricTree.modify` (`search/tree/MetricTree.java:300-328`).
+    * The names are collected and expanded on the driver by
+    * [[treeNodesOf]], the same derivation [[processBatch]] writes from.
     */
   def treeNodesFor(points: DataFrame): DataFrame = {
-    val names = points.select(col("metric").as("name")).distinct()
-    // explode each name into itself + all ancestor dirs
-    val withAncestors = names.select(explode(ancestorsCol(col("name"))).as("name")).distinct()
-    withAncestors.select(
-      col("name"),
-      levelCol(col("name")).as("level"),
-      parentCol(col("name")).as("parent"),
-      lit("SIMPLE").as("status"),
-      unix_timestamp().cast("long").as("updated")
-    )
+    import points.sparkSession.implicits._
+    simpleRows(points.sparkSession,
+      treeNodesOf(points.select("metric").distinct().as[String].collect()))
   }
 
   /** "a.b.c" → ["a.", "a.b.", "a.b.c"] as a pure column expression. */
@@ -189,94 +187,105 @@ final class IngestPipeline(
     * path: banned names are dropped before the queue
     * (`MetricTree.java:306-309`), a written metric's status goes through
     * the transition graph where AUTO_HIDDEN → SIMPLE is allowed (T6
-    * "reopens on new data").
+    * "reopens on new data"). Ban gate, new nodes and revivals are all
+    * read off one status map of the batch's paths (see the class notes);
+    * the first batch is the same path with an empty map.
     */
   def processBatch(points: Dataset[MetricPoint], batchId: Long): Unit = {
     val spark = points.sparkSession
+    import spark.implicits._
     val df = points.toDF().cache()
     try {
-      // explicit existence check, NOT a catch-all: a transient read error
-      // (corrupt file, FS hiccup) must fail the batch so streaming retry
-      // semantics stay visible, instead of silently re-appending the
-      // whole tree every batch
-      val treeP = new org.apache.hadoop.fs.Path(treePath)
-      val treeExists =
-        treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)
-      val tree =
-        if (!treeExists) None
-        else
-          try Some(spark.read.parquet(treePath))
-          catch {
-            // dir exists but holds no committed parquet (crash mid-first-
-            // write left only _temporary/_SUCCESS): a PERMANENT state the
-            // retry loop can never clear — treat as first batch. Other
-            // read errors still fail the batch (retry stays visible).
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("Unable to infer schema") => None
-          }
-      tree match {
-        case None =>
-          // per-dir caps apply even on the first batch (ranks within the
-          // batch, zero existing children); points of refused metrics
-          // are dropped like the reference's factory path (a null tree
-          // add drops the point, `server/BaseMetricFactory.java`)
-          val (acceptedNodes, refused) = applyTreeLimits(treeNodesFor(df), None)
-          val refusedMetrics = refused.filter(!col("name").endsWith("."))
-            .withColumnRenamed("name", "metric")
-          // sort each written part by (metric, timestamp) — MergeTree
-          // sorts every inserted part the same way; parquet row-group
-          // min/max stats then give key-range skipping on fresh data,
-          // not just compacted partitions
-          df.join(refusedMetrics, Seq("metric"), "left_anti")
-            .sortWithinPartitions("metric", "timestamp")
-            .write.mode("append").partitionBy("date").parquet(dataPath)
-          acceptedNodes.write.mode("append").parquet(treePath)
-          if (limits.enabled && limitStatsPath.nonEmpty)
-            recordRefusals(spark, refused.count(), batchId)
-        case Some(treeDf) =>
-          // current status of THIS batch's names AND their ancestor dirs
-          // (semi-join bounds the aggregation by batch size, not tree
-          // size): the reference ban gate rejects a metric when ANY dir
-          // on its path is banned (`MetricTree.java:300-328`), so a
-          // banned subtree blocks new children too, not just exact names
-          val batchPaths = df.select(col("metric")).distinct()
-            .select(col("metric"), explode(ancestorsCol(col("metric"))).as("name"))
-          val current = treeDf
-            .join(batchPaths.select("name").distinct(), Seq("name"), "left_semi")
-            .groupBy("name")
-            .agg(max_by(col("status"), col("updated")).as("status"))
-          val banned = batchPaths
-            .join(current.filter(col("status") === "BAN"), Seq("name"), "left_semi")
-            .select("metric").distinct()
-          val accepted = df.join(banned, Seq("metric"), "left_anti")
-          val nodes = treeNodesFor(accepted)
-          val newNodes =
-            nodes.join(treeDf.select("name").distinct(), Seq("name"), "left_anti")
-          // per-dir caps on the NEW nodes only (existing nodes always
-          // pass, reference returns the existing entry before the size
-          // check); existing child counts bounded to the batch's parents
-          val existingCounts =
-            if (!limits.enabled) None
-            else Some(treeDf
-              .join(nodes.select("parent").distinct(), Seq("parent"), "left_semi")
-              .select(col("parent"), col("name")).distinct()
-              .groupBy(col("parent"), col("name").endsWith(".").as("__is_dir"))
-              .agg(count(lit(1)).as("__children")))
-          val (acceptedNodes, refused) = applyTreeLimits(newNodes, existingCounts)
-          val refusedMetrics = refused.filter(!col("name").endsWith("."))
-            .withColumnRenamed("name", "metric")
-          accepted.join(refusedMetrics, Seq("metric"), "left_anti")
-            .sortWithinPartitions("metric", "timestamp")
-            .write.mode("append").partitionBy("date").parquet(dataPath)
-          val revived = nodes.join(
-            current.filter(col("status") === "AUTO_HIDDEN").select("name"),
-            Seq("name"), "left_semi")
-          acceptedNodes.unionByName(revived).write.mode("append").parquet(treePath)
-          if (limits.enabled && limitStatsPath.nonEmpty)
-            recordRefusals(spark, refused.count(), batchId)
-      }
+      val tree = readTree(spark)
+      val pathsOf = df.select("metric").distinct().as[String].collect()
+        .map(m => m -> pathOf(m)).toMap
+      val status = tree.fold(Map.empty[String, String])(latestStatus(_, pathsOf.values.flatten.toSet))
+      // the reference ban gate rejects a metric when ANY dir on its path
+      // is banned, so a banned subtree blocks new children too
+      val banned = pathsOf.keySet.filter(m => pathsOf(m).exists(p => status.get(p).contains("BAN")))
+      val nodes = treeNodesOf(pathsOf.keys.filterNot(banned))
+      val newNodes = simpleRows(spark, nodes.filter(n => !status.contains(n._1)))
+      val revived = simpleRows(spark, nodes.filter(n => status.get(n._1).contains("AUTO_HIDDEN")))
+      // per-dir caps on the NEW nodes only (existing nodes always pass,
+      // the reference returns the existing entry before the size check);
+      // existing child counts bounded to the new nodes' parents. Points
+      // of refused metrics are dropped like the reference's factory path
+      // (a null tree add drops the point, `server/BaseMetricFactory.java`)
+      val existingCounts =
+        if (!limits.enabled) None
+        else tree.map(_.join(newNodes.select("parent").distinct(), Seq("parent"), "left_semi")
+          .select(col("parent"), col("name")).distinct()
+          .groupBy(col("parent"), col("name").endsWith(".").as("__is_dir"))
+          .agg(count(lit(1)).as("__children")))
+      val (acceptedNodes, refused) = applyTreeLimits(newNodes, existingCounts)
+      val refusedMetrics = refused.filter(!col("name").endsWith("."))
+        .withColumnRenamed("name", "metric")
+      // sort each written part by (metric, timestamp) — MergeTree
+      // sorts every inserted part the same way; parquet row-group
+      // min/max stats then give key-range skipping on fresh data,
+      // not just compacted partitions
+      df.filter(!col("metric").isin(banned.toSeq: _*))
+        .join(refusedMetrics, Seq("metric"), "left_anti")
+        .sortWithinPartitions("metric", "timestamp")
+        .write.mode("append").partitionBy("date").parquet(dataPath)
+      acceptedNodes.unionByName(revived).coalesce(1)
+        .write.mode("append").parquet(treePath)
+      if (limits.enabled && limitStatsPath.nonEmpty)
+        recordRefusals(spark, refused.count(), batchId)
     } finally df.unpersist()
   }
+
+  /** The tree table, or None before the first batch. An explicit
+    * existence check, NOT a catch-all: a transient read error (corrupt
+    * file, FS hiccup) must fail the batch so streaming retry semantics
+    * stay visible, instead of silently re-appending the whole tree.
+    */
+  private def readTree(spark: SparkSession): Option[DataFrame] = {
+    val treeP = new org.apache.hadoop.fs.Path(treePath)
+    if (!treeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(treeP)) None
+    else
+      try Some(spark.read.parquet(treePath))
+      catch {
+        // dir exists but holds no committed parquet (crash mid-first-
+        // write left only _temporary/_SUCCESS): a PERMANENT state the
+        // retry loop can never clear — treat as first batch. Other
+        // read errors still fail the batch (retry stays visible).
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getMessage.contains("Unable to infer schema") => None
+      }
+  }
+
+  /** A name and all its ancestor dirs, "a.b.c" → [a.b.c, a.b., a.] —
+    * the driver-side [[ancestorsCol]] (the same set for every name).
+    */
+  private def pathOf(name: String): Seq[String] =
+    Iterator.iterate(name)(MetricNames.parent).takeWhile(_.nonEmpty).toSeq
+
+  /** (name, level, parent) of every given metric and its ancestor dirs,
+    * distinct and sorted — the one node derivation behind [[treeNodesFor]]
+    * and [[processBatch]] (`StreamingSpec` pins it to the column forms).
+    */
+  private[graft] def treeNodesOf(metrics: Iterable[String]): Seq[(String, Int, String)] =
+    metrics.iterator.flatMap(pathOf).toSeq.distinct.sorted
+      .map(n => (n, MetricNames.level(n), MetricNames.parent(n)))
+
+  /** SIMPLE tree rows, stamped now, for driver-side (name, level, parent) nodes. */
+  private def simpleRows(spark: SparkSession, nodes: Seq[(String, Int, String)]): DataFrame = {
+    import spark.implicits._
+    val now = System.currentTimeMillis() / 1000
+    nodes.map { case (n, level, parent) => (n, level, parent, "SIMPLE", now) }
+      .toDF("name", "level", "parent", "status", "updated")
+  }
+
+  /** Latest status per tree name among `paths`: the read side's
+    * [[graft.search.MetricSearchOps.currentTree]] over the tree rows of
+    * just those names, collected (the set is bounded by the batch).
+    * Names absent from the map are not in the tree.
+    */
+  private def latestStatus(tree: DataFrame, paths: Set[String]): Map[String, String] =
+    graft.search.MetricSearchOps.currentTree(tree.filter(col("name").isin(paths.toSeq: _*)))
+      .select("name", "status").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Wire a (line, updated) stream — the shape [[GraphiteSourceProvider]]
     * emits, with receive-time stamping done at the socket (reference

@@ -29,6 +29,17 @@ class ModelOpsSpec extends AnyFunSuite {
     assert(w.view.filterKeys(k => k != 16 && k != 45 && k != -1).values.forall(_ == 0.0))
   }
 
+  test("logRegTrain: a bucket whose docs all have null labels gets no gradient") {
+    // every doc is unlabeled, so every bucket, the bias included, sums
+    // null error terms: a null gradient counts as 0 and nothing moves
+    val docs = Seq[(Long, String, Option[Int])]((1L, "good", None), (2L, "spam", None))
+      .toDF("doc_id", "text", "y")
+    val w = ModelOps.logRegTrain(docs, col("y") === 1)
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(w.size === 65)
+    assert(w.values.forall(_ == 0.0))
+  }
+
   test("logRegScored: held-out fifth is scored, train split is not, labels thresholded at 0.5") {
     // ids 5,10 are held out (mod 5); the training split is separable
     // on 'good'/'spam' so held-out copies score on the right side.
